@@ -159,11 +159,6 @@ def main(argv=None) -> int:
                          "JSON reports per-run results + medians so each "
                          "BENCH_rN.json carries its own noise bound "
                          "(round-4 VERDICT ask #5)")
-    ap.add_argument("--ab-cue-gate", action="store_true",
-                    help="A/B the round-3 cue-gate widening: run the "
-                         "pipeline leg with the production gate and with "
-                         "MPS_AB_NARROW_CUE_GATE=1 (round-2 cue-only "
-                         "semantics) and report both throughputs")
     ap.add_argument("--bucketed-input", action="store_true",
                     help="materialize the transcripts as a conv_id-bucketed "
                          "table (untimed ingest write, the production "
@@ -256,33 +251,6 @@ def main(argv=None) -> int:
             "runs": len(runs), "efficiencies": effs, "median": median,
             "legs": runs[-1]["legs"],
         }))
-        return 0
-
-    if args.ab_cue_gate:
-        # VERDICT round-3 ask #3: price the cue-gate widening in isolation
-        # — same HEAD, same input, one env flag, two subprocess legs.
-        legs = {}
-        for label, env_extra in (("widened", {}),
-                                 ("narrow", {"MPS_AB_NARROW_CUE_GATE": "1"})):
-            cmd = [sys.executable, __file__, "--pipeline-only",
-                   "--cores", str(args.cores), "--sf-dir", args.sf_dir,
-                   "--n-convs", str(n_convs)]
-            # the widened leg must NOT inherit a stray narrow-gate flag
-            # from the calling shell (ADVICE round-4): build env with the
-            # flag removed, then apply this leg's extras
-            env = dict(os.environ)
-            env.pop("MPS_AB_NARROW_CUE_GATE", None)
-            env.update(env_extra)
-            out = subprocess.run(cmd, capture_output=True, text=True,
-                                 check=True, env=env).stdout.strip() \
-                .splitlines()[-1]
-            legs[label] = json.loads(out)["pipeline"]
-        ratio = round(legs["widened"]["turns_per_sec"]
-                      / legs["narrow"]["turns_per_sec"], 4)
-        print(json.dumps({
-            "metric": "cue_gate_widening_ab",
-            "value": ratio, "unit": "widened/narrow turns_per_sec ratio",
-            "sf": sf, "legs": legs}))
         return 0
 
     if args.pipeline_only:

@@ -1,9 +1,6 @@
 """Entity canonicalization: MinHash-LSH blocking + iterative-join connected
-components (north_star: "canonicalization clusters surface forms via
-MinHash-LSH blocking plus GraphFrames/iterative-join connected components").
-
-GraphFrames is not a dependency — the iterative min-label propagation below
-is the dependency-free path (SURVEY.md §7 step 6):
+components. Connected components has one code path, the DataFrame-only
+iterative min-label propagation below (SURVEY.md §7 step 6):
 
 - blocking avoids the O(n²) pair explosion: 16 MD5 MinHashes over char
   3-shingles, banded 2-per-band into 8 LSH buckets per surface; only
@@ -82,66 +79,15 @@ def lsh_candidate_pairs(vertices: DataFrame, max_bucket: int = 50,
     return pairs, n_dropped
 
 
-def graphframes_available() -> bool:
-    try:
-        import graphframes  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def ensure_checkpoint_dir(spark) -> str:
-    """Set a SparkContext checkpoint directory if none is configured and
-    return it. GraphFrame.connectedComponents() (default algorithm) calls
-    sc.setCheckpointDir-dependent RDD checkpoints; without one it raises at
-    runtime. Rooted under spark.local.dir (tmpfs/fast disk in session.py)
-    with a per-app subdir so concurrent sessions don't collide."""
-    sc = spark.sparkContext
-    existing = sc._jsc.sc().getCheckpointDir()
-    if existing.isDefined():
-        return existing.get()
-    base = sc.getConf().get("spark.local.dir", "/tmp")
-    path = f"{base.split(',')[0]}/mps_ckpt_{sc.applicationId}"
-    sc.setCheckpointDir(path)
-    return path
-
-
 def connected_components(vertices: DataFrame, edges: DataFrame,
-                         max_iter: int = 50,
-                         use_graphframes: bool | str = "auto") -> DataFrame:
+                         max_iter: int = 50) -> DataFrame:
     """Iterative min-label propagation. vertices: (skey, init_label);
     edges: (ka, kb) undirected. Returns (skey, entity_label).
-
-    north_star names "GraphFrames/iterative-join connected components":
-    when the graphframes package is importable (use_graphframes='auto' or
-    True) the CC step delegates to GraphFrame.connectedComponents() and the
-    cluster label is still the lexicographic MIN init_label per component
-    (identical output either path); the dependency-free iterative join is
-    the default sandbox path.
 
     Convergence requires iterations >= cluster diameter; non-convergence
     within max_iter (a >50-hop near-dup chain) is loudly warned rather than
     silently emitting split clusters."""
     import warnings
-
-    if use_graphframes is True or (use_graphframes == "auto"
-                                   and graphframes_available()):
-        from graphframes import GraphFrame
-        g = GraphFrame(
-            vertices.select(F.col("skey").alias("id"), "init_label"),
-            edges.select(F.col("ka").alias("src"), F.col("kb").alias("dst")))
-        # GraphFrames' default CC algorithm REQUIRES a Spark checkpoint
-        # directory (it reliably raises otherwise — merely installing the
-        # package would flip 'auto' on and break every canonicalization
-        # pass). Provision one on demand, rooted in spark.local.dir so it
-        # lands on the fast local disk, not the warehouse.
-        ensure_checkpoint_dir(vertices.sparkSession)
-        cc = g.connectedComponents()
-        labels = (cc.groupBy("component")
-                  .agg(F.min("init_label").alias("label"))
-                  .join(cc.select("id", "component"), "component")
-                  .select(F.col("id").alias("skey"), "label"))
-        return labels.withColumnRenamed("label", "entity_label")
 
     sym = edges.union(edges.select(F.col("kb").alias("ka"),
                                    F.col("ka").alias("kb")))

@@ -41,7 +41,6 @@ from __future__ import annotations
 
 import functools
 import hashlib
-import os
 import re
 import unicodedata
 from dataclasses import dataclass
@@ -847,22 +846,11 @@ _DELETION_TRIGGER_RE = re.compile(
     re.IGNORECASE)
 
 
-#: A/B bench switch (round-4 VERDICT ask #3): "1" reverts the gate to the
-#: round-2 cue-only semantics so bench.py can price the round-3 widening
-#: (deletion-trigger fall-through) in isolation. NEVER set in production —
-#: the narrow gate drops turns whose cue only appears after normalization.
-#: Read at import so Spark's Python workers (separate processes that
-#: re-import this module) see the same gate as the driver.
-_AB_NARROW_CUE_GATE = os.environ.get("MPS_AB_NARROW_CUE_GATE") == "1"
-
-
 def turn_may_extract(text: str) -> bool:
     """Cheap necessary condition for extraction output (hot-path gate)."""
     d = deburr(text)
     if _CUE_RE.search(d):
         return True
-    if _AB_NARROW_CUE_GATE:
-        return False
     return bool(_DELETION_TRIGGER_RE.search(d))
 
 
@@ -876,8 +864,7 @@ def java_cue_gate_pattern() -> str:
     source: plain alternations, character classes, bounded repeats, and
     escaped literals only — validated against java.util.regex at pipeline
     setup (pipeline.cue_prefilter_condition)."""
-    body = _CUE_RE.pattern if _AB_NARROW_CUE_GATE else (
-        _CUE_RE.pattern + "|" + _DELETION_TRIGGER_RE.pattern)
+    body = _CUE_RE.pattern + "|" + _DELETION_TRIGGER_RE.pattern
     return "(?i)(?:" + body + ")"
 
 
@@ -1164,7 +1151,9 @@ def _embed_tok(tok: str, dim: int) -> tuple[int, float]:
     function of the token; memoized because the md5 here was ~the entire
     cost of embed_text while corpus token vocabularies are tiny relative
     to token counts (measured 6-8x on the semantic-search bench query).
-    Cache bound: 262144 entries x ~100 B ≈ 25 MB/worker worst case."""
+    Cache bound: 262144 entries x ~267 B ≈ 67 MB/worker worst case
+    (tracemalloc, CPython 3.11, cache filled with distinct 10-char tokens
+    that only the cache holds, so the token strings count too)."""
     h = hashlib.md5(tok.encode("utf-8")).digest()
     return int.from_bytes(h[:4], "big") % dim, \
         (1.0 if h[4] % 2 == 0 else -1.0)

@@ -1,11 +1,11 @@
-"""Optional-backend seams: Iceberg TableIO branch and GraphFrames CC path
-degrade gracefully when the runtime dependencies are absent (they are in
-this sandbox), and activate behind the same interfaces when present."""
+"""Backend seams: the optional Iceberg TableIO branch degrades gracefully
+when its runtime is absent and activates behind the same interface when
+present; connected components labels each component with its minimum
+init_label."""
 
 import pytest
 
-from master_project_spark.canonicalize import (connected_components,
-                                               graphframes_available)
+from master_project_spark.canonicalize import connected_components
 from master_project_spark.tableio import IcebergTableIO, iceberg_available
 
 
@@ -18,13 +18,14 @@ def test_iceberg_detection_and_explicit_error(spark):
 
 
 def test_cc_iterative_fallback_matches_forced_off(spark):
-    """use_graphframes='auto' without the package == iterative path."""
+    """The iterative min-label path (the only CC path): a two-hop chain
+    collapses to its minimum label; an isolated vertex keeps its own."""
     v = spark.createDataFrame(
         [("a", "1a"), ("b", "1b"), ("c", "1c"), ("d", "1d")],
         "skey string, init_label string")
     e = spark.createDataFrame([("a", "b"), ("b", "c")], "ka string, kb string")
     got = {(r["skey"], r["entity_label"])
-           for r in connected_components(v, e, use_graphframes="auto").collect()}
+           for r in connected_components(v, e).collect()}
     want = {("a", "1a"), ("b", "1a"), ("c", "1a"), ("d", "1d")}
     assert got == want
 
@@ -152,37 +153,3 @@ def test_iceberg_partitioned_commit_passes_columns(monkeypatch, spark):
     # the writer received the partition column (stringified Column is
     # stable enough to assert the name reached it)
     assert "wh.kg.extracted" in cat.tables
-
-
-def test_ensure_checkpoint_dir_sets_and_is_idempotent(spark):
-    """ADVICE (medium, round 3): the GraphFrames CC path requires a
-    SparkContext checkpoint dir; ensure_checkpoint_dir must provision one
-    (rooted under spark.local.dir) exactly once and return the existing one
-    on every later call — and RDD checkpointing must actually work there."""
-    from master_project_spark.canonicalize import ensure_checkpoint_dir
-
-    path1 = ensure_checkpoint_dir(spark)
-    assert path1
-    assert spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    # idempotent: the second call returns the already-configured dir (Spark
-    # reports it scheme-qualified with a per-context UUID subdir appended)
-    path2 = ensure_checkpoint_dir(spark)
-    assert path1 in path2
-    # the dir is usable for the RDD checkpoints GraphFrames performs
-    rdd = spark.sparkContext.parallelize(range(10), 2)
-    rdd.checkpoint()
-    assert rdd.sum() == 45 and rdd.isCheckpointed()
-
-
-@pytest.mark.skipif(not graphframes_available(),
-                    reason="graphframes not installed in this sandbox")
-def test_cc_graphframes_equals_iterative(spark):
-    v = spark.createDataFrame(
-        [("a", "1a"), ("b", "1b"), ("c", "1c"), ("d", "1d")],
-        "skey string, init_label string")
-    e = spark.createDataFrame([("a", "b"), ("c", "d")], "ka string, kb string")
-    it = sorted(map(tuple, connected_components(
-        v, e, use_graphframes=False).collect()))
-    gf = sorted(map(tuple, connected_components(
-        v, e, use_graphframes=True).collect()))
-    assert it == gf
